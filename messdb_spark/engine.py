@@ -99,12 +99,19 @@ class Engine:
         # The lease spans put AND register: between the CAS commit and
         # the root swap the object is referenced by nothing, and a
         # concurrent gc would sweep it out from under the registration
-        # (caught by tests/test_gc_writer_race.py before this guard)
+        # (caught by tests/test_gc_writer_race.py before this guard).
+        # A table that carries the hash of the object it reads (a
+        # memoized view's result) is already stored: check it exists
+        # and register it, the relink_table guard, with no write.
         from .session import job_desc
         with self.objects.lease(), \
                 job_desc(self.spark, f"save_table:{name}"):
-            h = self.objects.put(table.df, table_content_hash,
-                                 key_cols=tuple(table.key_cols))
+            h = table.table_hash
+            if h is None:
+                h = self.objects.put(table.df, table_content_hash,
+                                     key_cols=tuple(table.key_cols))
+            elif not self.objects.exists(h):
+                raise KeyError(f"object {h} not in store")
             self._register(name, CatalogEntry(
                 table_hash=h,
                 schema_json=table.df.schema.json(),
@@ -172,8 +179,8 @@ class Engine:
             if ref is not None:       # bucketed table: schema rides the
                 schema_json = ref.schema_json      # manifest, zero jobs
             else:
-                schema_json = self.objects.load(self.spark,
-                                                table_hash).schema.json()
+                schema_json = self.objects.schema(self.spark,
+                                                  table_hash).json()
             self._register(name, CatalogEntry(
                 table_hash=table_hash, schema_json=schema_json,
                 key_cols=list(key_cols)))
@@ -422,21 +429,9 @@ class Engine:
         if e is None:
             raise KeyError(f"no such table: {name}"
                            + (f" at version {version}" if version is not None else ""))
-        from .plans.incremental import load_manifest, read_bucketed
-        ref = load_manifest(self.objects, e.table_hash)
-        if ref is not None:
-            return read_bucketed(self.spark, self.objects, ref)
-        from .plans.range_layout import (load_range_manifest,
-                                         read_range_bucketed)
-        rref = load_range_manifest(self.objects, e.table_hash)
-        if rref is not None:
-            return read_range_bucketed(self.spark, self.objects, rref)
-        from .plans.adaptive import load_adaptive_manifest, read_adaptive
-        aref = load_adaptive_manifest(self.objects, e.table_hash)
-        if aref is not None:
-            return read_adaptive(self.spark, self.objects, aref)
-        df = self.objects.load(self.spark, e.table_hash)
-        return KeyedTable(df, tuple(e.key_cols))
+        from .plans.incremental import read_stored_table
+        return read_stored_table(self.spark, self.objects, e.table_hash,
+                                 e.key_cols)
 
     def table_hash(self, name: str) -> str:
         if self._txn_entries is not None and name in self._txn_entries:
@@ -660,9 +655,10 @@ class Engine:
                 raise SqlError(f"{name} is a base table, not a "
                                f"materialized view; DROP TABLE it first")
         h = self._materialize_view_sql(select_sql)
-        df = self.objects.load(self.spark, h)
         self._register(name, CatalogEntry(
-            table_hash=h, schema_json=df.schema.json(), key_cols=[]))
+            table_hash=h,
+            schema_json=self.objects.schema(self.spark, h).json(),
+            key_cols=[]))
         from .store import _atomic_write_json
         defs = self._view_defs()
         defs[name] = select_sql
@@ -686,9 +682,10 @@ class Engine:
         hit = self.memo.hits > hits_before
         prev = self.catalog.get(name)
         if prev is None or prev.table_hash != h:
-            df = self.objects.load(self.spark, h)
             self._register(name, CatalogEntry(
-                table_hash=h, schema_json=df.schema.json(), key_cols=[]))
+                table_hash=h,
+                schema_json=self.objects.schema(self.spark, h).json(),
+                key_cols=[]))
         return {"op": "refresh_materialized_view", "view": name,
                 "table_hash": h, "refreshed": not hit}
 

@@ -46,6 +46,11 @@ class KeyedTable:
 
     df: DataFrame
     key_cols: tuple[str, ...]
+    #: content hash of the stored object ``df`` reads, set only by code
+    #: that has just loaded that object; ``Engine.save_table`` then
+    #: registers it without writing it again. A derived frame is a new
+    #: KeyedTable and carries no hash.
+    table_hash: str | None = None
 
     @property
     def value_cols(self) -> tuple[str, ...]:

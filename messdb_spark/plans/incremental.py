@@ -34,11 +34,12 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..hashing import bucket_content_hashes
+from ..hashing import bucket_content_hashes, table_content_hash
 from ..operators.core import KeyedTable
 from ..store import ObjectStore
 
@@ -171,14 +172,16 @@ def _write_tagged_buckets(store: ObjectStore, with_b: DataFrame,
         # lease: GC must not sweep mid stage→commit
         (rep.write.mode("overwrite").partitionBy(_BUCKET)
             .option("compression", store.compression).parquet(staging))
+        # staged partition dirs by tag: the writer Hive-escapes tag
+        # values in directory names (":" → "%3A", "%" → "%25")
+        staged = {unquote(d.split("=", 1)[1]): d
+                  for d in os.listdir(staging) if d.startswith(f"{_BUCKET}=")}
         if finish is not None:
             hashes = finish(key_fn)
             # a tag outside the declared domain would have been written
             # but never digested/registered — catch the caller bug
-            # loudly (one listdir) instead of silently dropping data
-            staged = {d.split("=", 1)[1] for d in os.listdir(staging)
-                      if d.startswith(f"{_BUCKET}=")}
-            extra = staged - {str(t) for t in tag_domain}
+            # loudly instead of silently dropping data
+            extra = set(staged) - {str(t) for t in tag_domain}
             if extra:
                 raise AssertionError(
                     f"bucket write produced tags outside the declared "
@@ -189,8 +192,9 @@ def _write_tagged_buckets(store: ObjectStore, with_b: DataFrame,
             hashes = bucket_content_hashes(
                 spark.read.schema(with_b.schema).parquet(staging), _BUCKET,
                 key_fn=key_fn)
+        schema = with_b.drop(_BUCKET).schema
         for b, h in hashes.items():
-            src = os.path.join(staging, f"{_BUCKET}={b}")
+            src = os.path.join(staging, staged[str(b)])
             dst = store.path(h)
             if store.exists(h):
                 store.save_skips += 1      # content dedup: already stored
@@ -199,6 +203,7 @@ def _write_tagged_buckets(store: ObjectStore, with_b: DataFrame,
                 shutil.move(src, dst)
                 open(os.path.join(dst, "_SUCCESS"), "w").close()
                 store.saves += 1
+                store.schemas[h] = schema
         shutil.rmtree(staging, ignore_errors=True)
     return hashes
 
@@ -282,16 +287,51 @@ def read_bucketed(spark: SparkSession, store: ObjectStore,
                   ref: BucketedRef, buckets: list[int] | None = None) -> KeyedTable:
     """Assemble the table (or a bucket subset — bucket pruning for
     point lookups) from its bucket objects."""
+    from pyspark.sql import types as T
+
     wanted = range(ref.n_buckets) if buckets is None else buckets
     paths = [store.path(ref.bucket_hashes[b]) for b in wanted
              if ref.bucket_hashes[b] != EMPTY]
+    schema = T.StructType.fromJson(json.loads(ref.schema_json))
     if not paths:
-        from pyspark.sql import types as T
-        schema = T.StructType.fromJson(json.loads(ref.schema_json))
         return KeyedTable(spark.createDataFrame([], schema=schema), ref.key_cols)
-    for _ in paths:
-        store.loads += 1
-    return KeyedTable(spark.read.parquet(*paths), ref.key_cols)
+    store.loads += len(paths)
+    # the manifest's schema: an inferring read costs a footer job
+    return KeyedTable(spark.read.schema(schema).parquet(*paths), ref.key_cols)
+
+
+def read_stored_table(spark: SparkSession, store: ObjectStore,
+                      table_hash: str, key_cols) -> KeyedTable:
+    """Read any stored table by hash: a manifest of any flavor
+    reassembles from its bucket objects, a plain object loads with its
+    known schema. ``Engine.load_table`` and the view IR's scan node
+    both resolve through here."""
+    ref = load_manifest(store, table_hash)
+    if ref is not None:
+        return read_bucketed(spark, store, ref)
+    from .range_layout import load_range_manifest, read_range_bucketed
+    rref = load_range_manifest(store, table_hash)
+    if rref is not None:
+        return read_range_bucketed(spark, store, rref)
+    from .adaptive import load_adaptive_manifest, read_adaptive
+    aref = load_adaptive_manifest(store, table_hash)
+    if aref is not None:
+        return read_adaptive(spark, store, aref)
+    return KeyedTable(store.load(spark, table_hash), tuple(key_cols))
+
+
+def touched_buckets(delta: DataFrame, deletes: DataFrame | None,
+                    key_cols: tuple[str, ...], n_buckets: int) -> list[int]:
+    """Sorted bucket ids an upsert of ``delta`` (and ``deletes``)
+    rewrites, in ONE global aggregation over the raw keys: folding
+    duplicate delta keys does not change the key set, so this never
+    waits on the delta's canonicalization."""
+    b = _bucket_expr(key_cols, n_buckets).alias("b")
+    keys = delta.select(b)
+    if deletes is not None:
+        keys = keys.union(deletes.select(b))
+    row = keys.agg(F.collect_set("b").alias("bs")).collect()[0]
+    return sorted(row["bs"])
 
 
 def incremental_upsert(spark: SparkSession, store: ObjectStore,
@@ -310,20 +350,17 @@ def incremental_upsert(spark: SparkSession, store: ObjectStore,
     content, which the CAS dedups back to the same bucket hash.
     """
     keys = ref.key_cols
+    touched = touched_buckets(delta, deletes, keys, ref.n_buckets)
+    if not touched:
+        return ref
     # fold within-delta duplicate keys first (last delta row wins) —
     # the anti-join below requires a one-row-per-key delta
     from ..operators.core import canonicalize_input
     delta = canonicalize_input(delta, keys).df
     delta_b = delta.withColumn(_BUCKET, _bucket_expr(keys, ref.n_buckets))
-    touched_df = delta_b.select(F.col(_BUCKET).alias("b"))
     del_keys = None
     if deletes is not None:
         del_keys = deletes.select(*keys).distinct()
-        touched_df = touched_df.union(
-            del_keys.select(_bucket_expr(keys, ref.n_buckets).alias("b")))
-    touched = sorted(r["b"] for r in touched_df.distinct().collect())
-    if not touched:
-        return ref
     base_touched = read_bucketed(spark, store, ref, buckets=touched).df
     delta_rows = delta_b.drop(_BUCKET).select(*base_touched.columns) \
         if base_touched.columns else delta
@@ -361,9 +398,17 @@ def incremental_agg_view(spark: SparkSession, store: ObjectStore, memo,
     the final combine unions B tiny partial objects and re-aggregates
     (sum→sum, count→sum, max→max, min→min — the classic two-phase
     rule). ``aggs`` maps output name → (recombine op, partial Column).
-    Returns the combined KeyedTable keyed by ``group_cols``."""
-    from ..operators.core import KeyedTable
 
+    The combine is a memo node too, keyed by
+
+        sha256(OP_AGG_COMBINE ‖ view key ‖ sorted partial hashes)
+
+    and probed only when every partial was a hit (a recomputed partial
+    means a new key, so ``memo.misses`` counts recomputed partials
+    only). A miss stores the combined frame key-sorted in the CAS. The
+    returned KeyedTable, keyed by ``group_cols``, reads that object and
+    carries its hash, so ``Engine.save_table`` registers it without a
+    write: a refresh over unchanged input launches no Spark job."""
     recombine = {"sum": F.sum, "count": F.sum, "max": F.max, "min": F.min}
     for name, (op, _c) in aggs.items():
         if op not in recombine:
@@ -404,11 +449,22 @@ def incremental_agg_view(spark: SparkSession, store: ObjectStore, memo,
             memo.put(bucket_digest(ref.bucket_hashes[b]), h)
             partial_hashes.append(h)
 
-    parts = spark.read.parquet(*[store.path(h) for h in partial_hashes])
-    store.loads += len(partial_hashes)
-    combined = parts.groupBy(*group_cols).agg(
-        *[recombine[op](F.col(n)).alias(n) for n, (op, _c) in aggs.items()])
-    return KeyedTable(combined, tuple(group_cols))
+    combine_digest = hashlib.sha256(
+        f"OP_AGG_COMBINE|{view_key}|{','.join(sorted(partial_hashes))}"
+        .encode()).hexdigest()
+    h = memo.get(combine_digest) if not missed else None
+    if h is None or not store.exists(h):
+        parts = store.load_union(spark, partial_hashes)
+        combined = parts.groupBy(*group_cols).agg(
+            *[recombine[op](F.col(n)).alias(n)
+              for n, (op, _c) in aggs.items()])
+        # lease: gc must not sweep between the CAS commit and the memo
+        # record that keeps the object live
+        with store.lease():
+            h = store.put(combined, table_content_hash,
+                          key_cols=tuple(group_cols))
+            memo.put(combine_digest, h)
+    return KeyedTable(store.load(spark, h), tuple(group_cols), table_hash=h)
 
 
 def _map_bucket_digest(transform_key: str, in_hash: str) -> str:
@@ -543,7 +599,7 @@ def incremental_map_view(spark: SparkSession, store: ObjectStore, memo,
         # recover output schema from any materialized bucket
         for h in out_hashes:
             if h != EMPTY:
-                out_schema_json = store.load(spark, h).schema.json()
+                out_schema_json = store.schema(spark, h).json()
                 break
 
     return BucketedRef(key_cols=ref.key_cols, n_buckets=ref.n_buckets,
@@ -718,7 +774,7 @@ def incremental_join_view(spark: SparkSession, store: ObjectStore, memo,
     if out_schema_json is None:
         for h in out_hashes:
             if h != EMPTY:
-                out_schema_json = store.load(spark, h).schema.json()
+                out_schema_json = store.schema(spark, h).json()
                 break
         else:
             out_schema_json = ref_a.schema_json

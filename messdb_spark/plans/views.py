@@ -103,9 +103,10 @@ class Materializer:
 
     def _eval(self, ir: dict) -> KeyedTable:
         op = ir["op"]
-        if op == "scan":
-            df = self.objects.load(self.spark, ir["table_hash"])
-            return KeyedTable(df, tuple(ir["key_cols"]))
+        if op == "scan":     # plain object or manifest of any layout
+            from .incremental import read_stored_table
+            return read_stored_table(self.spark, self.objects,
+                                     ir["table_hash"], ir["key_cols"])
         if op == "merge":
             ins = [self._materialize_node(i) for i in ir["inputs"]]
             return merge_tables(ins, REGISTRY.get_fold(ir["fold"]))

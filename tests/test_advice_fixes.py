@@ -323,3 +323,59 @@ def test_sql_selective_registration_at_catalog_scale(spark, warehouse):
     assert eng.objects.loads - loads0 == 2         # O(referenced), not O(200)
     views1 = len([t.name for t in spark.catalog.listTables()])
     assert views1 - views0 <= 2                    # no namespace-wide views
+
+
+def test_untrusted_save_estimate_clamps_below_session_width(spark, tmp_path):
+    """A Long.MaxValue size estimate (an RDD-backed frame) on a
+    cluster-width session (1000 shuffle partitions) sizes a key-sorted
+    save at the trusted-estimate cap, not at the session width."""
+    from messdb_spark.store import ObjectStore
+
+    store = ObjectStore(str(tmp_path / "wh"))
+    df = spark.sparkContext.parallelize([(1, "a"), (2, "b")]).toDF(
+        "k long, v string")
+    size = int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    assert size >= 2 ** 62          # the driver-local sentinel
+    conf = spark.conf
+    prev = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "1000")
+    try:
+        assert store._save_partitions(df) == store._SAVE_EST_MAX_PARTS
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prev)
+    conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        assert store._save_partitions(df) == 3
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_materialized_view_over_bucketed_table(spark, warehouse):
+    """CREATE MATERIALIZED VIEW over a bucketed (manifest-backed) table
+    reads its buckets, equals ``Engine.sql`` over the table, and a
+    refresh after ``incremental_upsert`` picks the change up."""
+    from messdb_spark.plans.incremental import (incremental_upsert,
+                                                write_bucketed)
+
+    eng = Engine(spark, warehouse)
+    df = spark.createDataFrame([(i, f"g{i % 3}", i) for i in range(60)],
+                               "k long, g string, v long")
+    ref = write_bucketed(eng.objects, KeyedTable(df, ("k",)), n_buckets=4)
+    eng.save_bucketed_table("t", ref)
+    q = "SELECT g, count(*) AS n, sum(v) AS s FROM t GROUP BY g"
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    eng.create_materialized_view("mv", q)
+    assert rows(eng.load_table("mv").df) == rows(eng.sql(q))
+
+    delta = spark.createDataFrame([(1, "g9", 1000), (500, "g0", 7)],
+                                  "k long, g string, v long")
+    ref = incremental_upsert(spark, eng.objects, ref, delta)
+    eng.save_bucketed_table("t", ref)
+    assert eng.refresh_materialized_view("mv")["refreshed"] is True
+    got = rows(eng.load_table("mv").df)
+    assert got == rows(eng.sql(q))
+    assert ("g9", 1, 1000) in got

@@ -39,8 +39,8 @@ ALLOWED = {
         "point lookup: ≤1 manifest row + the rows of one key",
     "plans/adaptive.py::upsert_adaptive":
         "distinct touched bucket ids — delta-bounded by definition",
-    "plans/incremental.py::incremental_upsert":
-        "distinct touched bucket ids — delta-bounded by definition",
+    "plans/incremental.py::touched_buckets":
+        "1-row set of touched bucket ids — at most n_buckets values",
     "plans/range_layout.py::incremental_upsert_range":
         "distinct touched range-bucket ids — delta-bounded",
     "plans/zorder.py::write_zclustered":
