@@ -120,13 +120,38 @@ def table_content_hash(df: DataFrame, sort_columns: bool = True) -> str:
     return _digest_of_row(agg.collect()[0], schema_fingerprint(df))
 
 
+#: seconds a digest fold waits for its observed metrics. Spark
+#: delivers them on the listener bus right after the action; an event
+#: the bus drops (a full queue in an overloaded JVM) would leave
+#: ``Observation.get`` blocked forever, so past this wait ``finish``
+#: returns None and the caller re-scans the bytes it wrote.
+OBSERVE_WAIT_S = 30
+
+
+def _observed_row(obs):
+    """The metrics row of an Observation whose action has run, or None
+    if it was not delivered within :data:`OBSERVE_WAIT_S`."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = obs._jvm
+    try:
+        jvm.scala.concurrent.Await.ready(
+            obs._jo.future(),
+            jvm.scala.concurrent.duration.Duration.create(
+                OBSERVE_WAIT_S, "seconds"))
+    except Py4JJavaError:
+        return None
+    return obs.get
+
+
 def observed_content_hash(df: DataFrame):
     """Digest-during-action: returns ``(observed_df, finish)`` where
     ``observed_df`` is ``df`` with the content-digest aggregates
     attached as an :class:`pyspark.sql.Observation`, and ``finish()``
     (callable once any action has consumed ``observed_df``) returns
     the same hash :func:`table_content_hash` would compute — WITHOUT a
-    second pass. ``ObjectStore.put`` uses it to fold the digest into
+    second pass (None if the metrics never arrived, see
+    :data:`OBSERVE_WAIT_S`). ``ObjectStore.put`` uses it to fold the digest into
     the stage-write job: the rows streaming through the parquet writer
     ARE the rows digested, so the single evaluation also guarantees a
     nondeterministic plan can't store bytes mismatching their address
@@ -150,8 +175,9 @@ def observed_content_hash(df: DataFrame):
     odf = df.observe(obs, *_digest_aggs(canon_column(df)))
     fp = schema_fingerprint(df)
 
-    def finish() -> str:
-        return _digest_of_row(obs.get, fp)
+    def finish() -> str | None:
+        row = _observed_row(obs)
+        return None if row is None else _digest_of_row(row, fp)
     return odf, finish
 
 
@@ -170,7 +196,8 @@ def observed_bucket_hashes(df: DataFrame, bucket_col: str, tags: list):
     touched list, or ``range(n_buckets)``); each tag gets the same five
     aggregates the groupBy path computes, in ONE Observation, so
     ``finish(key_fn)`` returns exactly the dict
-    :func:`bucket_content_hashes` would have (pinned by
+    :func:`bucket_content_hashes` would have, or None like
+    :func:`observed_content_hash` (pinned by
     ``tests/test_observed_digest.py``). Rows stream through the parquet
     writer once and are digested in the same pass — the
     single-evaluation guarantee of :func:`observed_content_hash` holds
@@ -209,8 +236,10 @@ def observed_bucket_hashes(df: DataFrame, bucket_col: str, tags: list):
                      F.xxhash64(c, F.lit(1)).alias(H2))
              .observe(obs, *aggs).drop(H1, H2))
 
-    def finish(key_fn=int) -> dict:
-        row = obs.get
+    def finish(key_fn=int) -> dict | None:
+        row = _observed_row(obs)
+        if row is None:
+            return None
         out = {}
         for i, t in enumerate(tags):
             if not row[f"n{i}"]:

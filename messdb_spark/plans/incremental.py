@@ -176,8 +176,8 @@ def _write_tagged_buckets(store: ObjectStore, with_b: DataFrame,
         # values in directory names (":" → "%3A", "%" → "%25")
         staged = {unquote(d.split("=", 1)[1]): d
                   for d in os.listdir(staging) if d.startswith(f"{_BUCKET}=")}
-        if finish is not None:
-            hashes = finish(key_fn)
+        hashes = finish(key_fn) if finish is not None else None
+        if hashes is not None:
             # a tag outside the declared domain would have been written
             # but never digested/registered — catch the caller bug
             # loudly instead of silently dropping data
@@ -186,7 +186,7 @@ def _write_tagged_buckets(store: ObjectStore, with_b: DataFrame,
                 raise AssertionError(
                     f"bucket write produced tags outside the declared "
                     f"domain: {sorted(extra)[:8]}")
-        else:
+        else:     # no fold, or its metrics never came: re-scan the stage
             # explicit schema: an all-empty write leaves no part files
             # to infer from (legitimate since empty outputs memoize)
             hashes = bucket_content_hashes(

@@ -367,9 +367,8 @@ class ObjectStore:
             try:
                 (df.write.mode("overwrite")
                    .option("compression", self.compression).parquet(staging))
-                if finish is not None:
-                    h = finish()
-                else:
+                h = finish() if finish is not None else None
+                if h is None:      # no fold, or its metrics never came
                     spark = df.sparkSession
                     h = content_hash_fn(spark.read.parquet(staging))
                 if self.exists(h):

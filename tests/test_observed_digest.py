@@ -209,3 +209,35 @@ def test_write_tagged_buckets_escaped_string_tags(spark, tmp_path):
         want = sorted(r["k"] for r in df.filter(F.col(_BUCKET) == t)
                       .collect())
         assert sorted(r["k"] for r in s1.load(spark, h).collect()) == want
+
+
+def test_undelivered_observation_falls_back_to_rescan(spark, tmp_path,
+                                                      monkeypatch):
+    """Observed metrics that never arrive (a dropped listener-bus
+    event) must not block a write forever: the wait is bounded, the
+    fold reports None, and ``put`` and the bucket write re-scan their
+    staged bytes to the same addresses the fold computes."""
+    from messdb_spark import hashing
+    from messdb_spark.hashing import observed_bucket_hashes
+    from messdb_spark.plans.incremental import _BUCKET, _write_tagged_buckets
+
+    df = spark.createDataFrame([(i, f"v{i}", i % 3) for i in range(60)],
+                               f"k long, v string, {_BUCKET} long")
+    plain = spark.createDataFrame([(i, f"v{i}") for i in range(60)],
+                                  "k long, v string")
+
+    monkeypatch.setattr(hashing, "OBSERVE_WAIT_S", 1)
+    _odf, finish = observed_content_hash(plain)       # action never runs
+    assert finish() is None
+    _odf, finish = observed_bucket_hashes(df, _BUCKET, [0, 1, 2])
+    assert finish(int) is None
+
+    s1 = ObjectStore(str(tmp_path / "wh1"))
+    h_fold = s1.put(plain, table_content_hash)
+    b_fold = _write_tagged_buckets(s1, df, n_parts=3, tag_domain=[0, 1, 2])
+    monkeypatch.setattr(hashing, "_observed_row", lambda obs: None)
+    s2 = ObjectStore(str(tmp_path / "wh2"))
+    assert s2.put(plain, table_content_hash) == h_fold
+    assert _write_tagged_buckets(s2, df, n_parts=3,
+                                 tag_domain=[0, 1, 2]) == b_fold
+    assert s2.exists(h_fold) and all(s2.exists(h) for h in b_fold.values())
